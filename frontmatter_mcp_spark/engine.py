@@ -46,6 +46,19 @@ def _build_response(base: dict[str, Any], warnings: list[str]) -> dict[str, Any]
     return base
 
 
+def _rewrite_response(rows: list) -> dict[str, Any]:
+    """Response of a distributed rewrite from its (path, changed,
+    warning) rows, which arrive in task order. Files and warnings are put
+    in the driver loop's order (``collect_files`` sorts paths part by
+    part), so both paths return identical lists."""
+    rows = sorted(rows, key=lambda r: Path(r.path))
+    updated = [r.path for r in rows if r.changed]
+    warnings = [r.warning for r in rows if r.warning]
+    return _build_response(
+        {"updated_count": len(updated), "updated_files": updated}, warnings
+    )
+
+
 def _referenced_identifiers(sql: str) -> set[str]:
     """Lexical superset of the identifiers a SQL string references —
     bare words plus backtick/double-quoted names, with '*' recorded for
@@ -336,11 +349,7 @@ class FrontmatterEngine:
         )
         rows = status.collect()
         self.invalidate()
-        updated = sorted(r.path for r in rows if r.changed)
-        warnings = [r.warning for r in rows if r.warning]
-        return _build_response(
-            {"updated_count": len(updated), "updated_files": updated}, warnings
-        )
+        return _rewrite_response(rows)
 
     def _batch_array_op(
         self, glob: str, prop: str, op, files: list[Path] | None = None
@@ -411,11 +420,7 @@ class FrontmatterEngine:
         )
         rows = status.collect()
         self.invalidate()
-        updated = sorted(r.path for r in rows if r.changed)
-        warnings = sorted(r.warning for r in rows if r.warning)
-        return _build_response(
-            {"updated_count": len(updated), "updated_files": updated}, warnings
-        )
+        return _rewrite_response(rows)
 
     def batch_array_add(
         self,

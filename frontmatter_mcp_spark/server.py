@@ -13,7 +13,8 @@ semantic search is enabled, matching the reference's
 Protocol subset implemented: ``initialize``, ``ping``, ``tools/list``,
 ``tools/call``, and notification handling (no response). Tool results
 are returned MCP-style: a ``content`` array with the JSON text plus
-``structuredContent`` carrying the engine's response dict verbatim;
+``structuredContent`` carrying the same response as parsed JSON (values
+JSON cannot hold, such as YAML dates, arrive as their ``str()``);
 tool-level failures come back as ``isError: true`` rather than protocol
 errors, per the MCP spec.
 
@@ -191,9 +192,13 @@ class MCPServer:
                 "content": [{"type": "text", "text": f"{type(e).__name__}: {e}"}],
                 "isError": True,
             }
+        text = json.dumps(result, default=str)
+        # the structured copy is the text's JSON, not the engine's dict:
+        # frontmatter values such as YAML dates are not JSON types, and
+        # serve() must be able to write the reply line
         return {
-            "content": [{"type": "text", "text": json.dumps(result, default=str)}],
-            "structuredContent": result,
+            "content": [{"type": "text", "text": text}],
+            "structuredContent": json.loads(text),
             "isError": False,
         }
 

@@ -9,9 +9,11 @@ scales horizontally: the driver only lists paths (cheap), content I/O
 and YAML parsing are distributed.
 
 Stage IRs:
-  listing DF (path, rel_path, mtime)            narrow, driver-listed
+  listing DF (path, rel_path, mtime)            driver-listed, spread over
+     at most one task per core (one wave) and about one per 32 files
   -> parsed DF (path, mtime, props MAP, array_keys, body, error)
-     via mapInPandas (Arrow-batched, executor file reads)
+     via mapInPandas (Arrow-batched, executor file reads, libyaml
+     parse when installed)
   -> files DF (path, k1, k2, ...) by pivoting the key union
      (one lightweight agg to discover keys; the pivot itself is a
      narrow projection of map lookups — no shuffle)
@@ -45,7 +47,9 @@ def listing_df(spark: SparkSession, base_dir: str | Path, glob: str) -> DataFram
 
     At real scale the listing itself comes from the storage catalog /
     ``binaryFile`` distributed listing; the parse stage downstream is
-    already distributed either way.
+    already distributed either way. The parse stage and the engine's
+    distributed rewrites all run over this listing, so its partitioning
+    sets their task count.
     """
     base = Path(base_dir)
     rows = [
@@ -61,14 +65,15 @@ def listing_df(spark: SparkSession, base_dir: str | Path, glob: str) -> DataFram
     )
     df = spark.createDataFrame(rows, schema)
     if rows:
-        # spread file I/O across executors: enough tasks to use the
-        # cluster (≥ ~32 files each), capped so a million-file vault
-        # doesn't drown in task overhead. A 1000-file vault on 32 cores
-        # parses 32-way (the old flat ~512-files/task sizing gave it
-        # only 2 tasks — measured 2.5x slower end-to-end).
-        target = spark.sparkContext.defaultParallelism
-        n = max(1, min(len(rows) // 32 + 1, max(64, target * 4)))
-        df = df.repartition(n)
+        # one wave of tasks, and about one task per 32 files: every
+        # mapInPandas task pays a fixed cost (about 0.25 s on a 4-core
+        # host), so a second wave only adds that cost. A no-op
+        # mapInPandas over 1000 rows took 2.3-2.9 s as 32 tasks and
+        # 0.7-0.85 s as 4 on such a host. A 1000-file vault on 32
+        # cores still parses 32-way (a flat ~512-files/task sizing gave
+        # it only 2 tasks — measured 2.5x slower end-to-end).
+        slots = spark.sparkContext.defaultParallelism
+        df = df.repartition(max(1, min(len(rows) // 32 + 1, slots)))
     return df
 
 

@@ -157,6 +157,37 @@ def test_batch_array_distributed_matches_driver_path(spark, tmp_path):
             ).read_text(), f"{method} left different bytes in {name}"
 
 
+def test_batch_update_distributed_matches_driver_path(spark, tmp_path):
+    """batch_update through mapInPandas gives the driver loop's response,
+    warnings included and in its file order, with two malformed files
+    (one nested, so file order differs from the warnings' string
+    order), and leaves the same bytes."""
+
+    def vault(root):
+        _mutation_vault(root)
+        (root / "bad").mkdir()
+        (root / "bad" / "x.md").write_text("---\nalso: {broken\n---\n")
+        return root
+
+    eng_d = FrontmatterEngine(spark, vault(tmp_path / "driver"))
+    eng_x = FrontmatterEngine(spark, vault(tmp_path / "dist"))
+    out_d = eng_d.batch_update("**/*.md", set={"k": "v"}, unset=["date"])
+    out_x = eng_x.batch_update("**/*.md", set={"k": "v"}, unset=["date"], distributed=True)
+    assert [w.split(":")[0] for w in out_d["warnings"]] == [
+        "Failed to update bad/x.md",
+        "Failed to update bad.md",
+    ]
+    assert out_x == out_d
+    # an array op's skip warning interleaves with the parse failures
+    out_d = eng_d.batch_array_add("**/*.md", "tags", "spark")
+    out_x = eng_x.batch_array_add("**/*.md", "tags", "spark", distributed=True)
+    assert len(out_d["warnings"]) == 3 and out_x == out_d
+    for name in ("a.md", "b.md", "c.md", "bad.md", "bad/x.md"):
+        assert (tmp_path / "dist" / name).read_bytes() == (
+            tmp_path / "driver" / name
+        ).read_bytes(), f"different bytes in {name}"
+
+
 def test_mutation_invalidates_query_snapshot(engine, vault):
     out0 = engine.query("*.md", "SELECT * FROM files")
     assert "reviewed" not in out0["columns"]  # dynamic schema: column absent

@@ -6,6 +6,9 @@ import json
 import os
 
 import pytest
+import yaml
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from frontmatter_mcp_spark import files as fm
 
@@ -55,7 +58,91 @@ def test_parse_files_malformed_yaml_warning(tmp_path):
         fm.collect_files(tmp_path, "*.md"), tmp_path, fm.FileRecordCache()
     )
     assert [r.path for r in records] == ["good.md"]
-    assert len(warnings) == 1 and "bad.md" in warnings[0]
+    # libyaml words this error differently; the warning must still carry
+    # the pure-Python loader's message, character for character
+    with pytest.raises(yaml.YAMLError) as pure:
+        yaml.load("invalid: [unclosed", Loader=yaml.SafeLoader)
+    assert warnings == [f"Failed to parse bad.md: {pure.value}"]
+
+
+# the frontmatter of FIXTURES.md F1-F6 (F7, malformed input, is above)
+FIXTURE_FRONTMATTER = [
+    "date: 2025-11-27\ntags:\n  - python\n  - mcp\nsummary: A summary",
+    "date: 2025-11-26\ntags: [duckdb]",
+    "title: abcdefghijklmnopqrst\ndate: 2024-03-09\ntags: [python, notes, cli]\n"
+    "draft: true\npriority: 3\nprop_6: xyz",
+    "summary:",
+    "summary: Has summary",
+    "value: string",
+    "value: 42",
+    "value: 3.14",
+    "value: true",
+    "value: [a, b]",
+    'date: <% tp.date.now("YYYY-MM-DD") %>',
+    "tags: [a, b, a, c, b]",
+    "tags: []",
+    "tags: [python, mcp, [nested, array]]",
+    "date: 2025-11-27\ntags: scalar-not-array",
+]
+
+# plain scalars whose type the YAML 1.1 resolver decides
+RESOLVED_SCALARS = [
+    "yes", "No", "on", "~", "null", "2025-11-27", "2025-11-27 10:00:00",
+    "2025-11-27T10:00:00+02:00", "0o17", "017", "0x1F", "1_000", "1e3",
+    "6.02e+23", ".inf", "-.Inf", ".nan", "+1", "-0", "190:20:30", "true",
+    "FALSE", "'quoted'", '"esc\\tape"', "plain text, with comma",
+]
+
+
+def _outcome(load):
+    try:
+        return "ok", repr(load())  # repr tells True from 1 and 1.0
+    except yaml.YAMLError as e:
+        return "error", str(e)
+
+
+def _assert_loads_like_safe_load(frontmatter: str) -> None:
+    doc = f"---\n{frontmatter}\n---\nBody\n"
+    head, _ = fm.split_frontmatter(doc)
+
+    def reference():
+        loaded = yaml.safe_load(head)
+        return loaded if isinstance(loaded, dict) else {}
+
+    assert _outcome(lambda: fm.parse_document(doc)["metadata"]) == _outcome(reference)
+
+
+@pytest.mark.parametrize(
+    "frontmatter",
+    FIXTURE_FRONTMATTER
+    + [f"k: {s}" for s in RESOLVED_SCALARS]
+    + [f"k: [{s}]" for s in RESOLVED_SCALARS if "," not in s],
+)
+def test_parse_document_loads_like_safe_load(frontmatter):
+    _assert_loads_like_safe_load(frontmatter)
+
+
+_scalars = st.one_of(
+    st.none(), st.booleans(), st.integers(), st.floats(), st.text(max_size=20), st.dates()
+)
+_values = st.recursive(
+    _scalars,
+    lambda kids: st.lists(kids, max_size=4)
+    | st.dictionaries(st.text(min_size=1, max_size=8), kids, max_size=4),
+    max_leaves=12,
+)
+
+
+@given(
+    st.dictionaries(st.text(min_size=1, max_size=12), _values, min_size=1, max_size=6),
+    st.sampled_from([False, True, None]),
+)
+@settings(max_examples=300, deadline=None)
+def test_parse_document_loads_like_safe_load_property(metadata, flow):
+    text = yaml.safe_dump(
+        metadata, default_flow_style=flow, allow_unicode=True, sort_keys=False
+    )
+    _assert_loads_like_safe_load(text.rstrip("\n"))
 
 
 def test_mtime_cache_hit_and_invalidate(tmp_path):

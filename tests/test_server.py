@@ -188,3 +188,31 @@ def test_serve_loop_stdio_roundtrip(server):
     assert [r["id"] for r in responses] == [0, 1, 2, 3]  # notification skipped
     assert responses[2]["result"]["structuredContent"]["results"] == [{"n": 2}]
     assert responses[3]["result"] == {}
+
+
+def test_serve_loop_survives_update_of_dated_frontmatter(server, vault):
+    """An update reply carries the file's frontmatter; a YAML date in it
+    arrives as its ISO string, and the loop goes on to the next frame."""
+    (vault / "d.md").write_text("---\ndate: 2025-11-27\ntitle: Dated\n---\nBody D\n")
+    frames = [
+        {
+            "jsonrpc": "2.0",
+            "id": 1,
+            "method": "tools/call",
+            "params": {"name": "update", "arguments": {"path": "d.md", "set": {"status": "done"}}},
+        },
+        {"jsonrpc": "2.0", "id": 2, "method": "ping"},
+    ]
+    stdin = io.StringIO("".join(json.dumps(f) + "\n" for f in frames))
+    stdout = io.StringIO()
+    server.serve(stdin, stdout)
+    responses = [json.loads(line) for line in stdout.getvalue().splitlines()]
+    assert [r["id"] for r in responses] == [1, 2]
+    result = responses[0]["result"]
+    assert result["isError"] is False
+    assert result["structuredContent"] == {
+        "path": "d.md",
+        "frontmatter": {"date": "2025-11-27", "title": "Dated", "status": "done"},
+    }
+    assert json.loads(result["content"][0]["text"]) == result["structuredContent"]
+    assert responses[1]["result"] == {}

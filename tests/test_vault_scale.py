@@ -5,7 +5,11 @@ from __future__ import annotations
 
 import time
 
+import pytest
+from pyspark.sql import functions as F
+
 from frontmatter_mcp_spark.engine import FrontmatterEngine
+from frontmatter_mcp_spark.sources.markdown import listing_df
 
 N_FILES = 1500
 
@@ -47,3 +51,23 @@ def test_engine_on_1500_file_vault(spark, tmp_path):
     schema = eng.query_inspect("**/*.md")
     assert schema["file_count"] == N_FILES
     assert schema["schema"]["tags"]["type"] == "array"
+
+
+@pytest.mark.parametrize("n_files", [1, 40, N_FILES])
+def test_listing_is_one_wave_of_tasks(spark, tmp_path, n_files):
+    """The listing that the parse and the distributed rewrites run over
+    has at most one task per core and about one task per 32 files
+    (every mapInPandas task pays a fixed cost): no task gets fewer than
+    16 files unless the whole vault has fewer, and a vault that fills
+    every core gives each task 32 or more."""
+    for i in range(n_files):
+        (tmp_path / f"f{i:05d}.md").write_text(f"---\nn: {i}\n---\n")
+    df = listing_df(spark, tmp_path, "*.md")
+    slots = spark.sparkContext.defaultParallelism
+    n_tasks = df.rdd.getNumPartitions()
+    assert 1 <= n_tasks <= slots
+    sizes = [r["count"] for r in df.groupBy(F.spark_partition_id()).count().collect()]
+    assert len(sizes) == n_tasks and sum(sizes) == n_files
+    assert min(sizes) >= min(n_files, 16)
+    if n_files >= 32 * slots:
+        assert min(sizes) >= 32
