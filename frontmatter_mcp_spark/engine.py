@@ -17,13 +17,17 @@ SQL goes verbatim (modulo the documented dialect shim) to ``spark.sql``
 — Catalyst plans it, exactly as the reference hands SQL to DuckDB
 (query.py:72). A per-(glob, listing-signature) snapshot cache plays the
 role of the reference's mtime parse cache: an unchanged vault never
-re-parses.
+re-parses. The snapshot is the cached parse plus what one aggregate
+over it returns (key union, warnings, file count), so ``query_inspect``
+runs one aggregate on a hit. The cache holds only what queries read
+(path, props, array_keys, error; no note bodies) and keeps the parse's
+partitioning.
 """
 
 from __future__ import annotations
 
 from pathlib import Path
-from typing import Any
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -37,6 +41,14 @@ from frontmatter_mcp_spark.semantic.model import EmbeddingModel
 from frontmatter_mcp_spark.semantic.query import attach_embeddings, register_embed_udf
 from frontmatter_mcp_spark.semantic.store import EmbeddingStore
 from frontmatter_mcp_spark.sources import markdown as md
+
+
+class _Snapshot(NamedTuple):
+    files: DataFrame | None  # the pivoted view; None when the vault is wide
+    parsed: DataFrame  # cached: path, props, array_keys, error
+    warnings: list[str]
+    keys: list[str]
+    file_count: int  # files parsed without error
 
 
 def _build_response(base: dict[str, Any], warnings: list[str]) -> dict[str, Any]:
@@ -106,8 +118,7 @@ class FrontmatterEngine:
         ship_package_to_executors(spark)  # user-supplied sessions too
         register_sql_functions(spark)
         self._snapshot_key: tuple | None = None
-        # (files_df | None-when-wide, parsed, warnings, keys)
-        self._snapshot: tuple[DataFrame | None, DataFrame, list[str], list[str]] | None = None
+        self._snapshot: _Snapshot | None = None
 
         self.semantic_enabled = semantic
         self.indexer: EmbeddingIndexer | None = None
@@ -155,21 +166,22 @@ class FrontmatterEngine:
     # ------------------------------------------------------------------
     # files-table construction with the snapshot cache (A3/A4)
     # ------------------------------------------------------------------
-    def _listing_signature(self, glob: str) -> tuple:
-        paths = fm.collect_files(self.base_dir, glob)
-        return (
-            glob,
-            tuple((p.relative_to(self.base_dir).as_posix(), p.stat().st_mtime) for p in paths),
-        )
+    def _listing_signature(self, glob: str) -> tuple[tuple, fm.Listing]:
+        """(snapshot key, listing): one walk, one ``stat`` per file; a
+        rebuild parses the listing the key was taken from."""
+        listing = fm.collect_files(self.base_dir, glob)
+        return (glob, tuple(listing), tuple(listing.mtimes)), listing
 
-    def _build_files(self, glob: str, sql: str | None = None) -> tuple[DataFrame, list[str]]:
-        key = self._listing_signature(glob)
+    def _build_files(self, glob: str) -> _Snapshot:
+        key, listing = self._listing_signature(glob)
         if self._snapshot is None or self._snapshot_key != key:
-            if self._snapshot is not None:
-                self._snapshot[1].unpersist()
-            parsed = md.parsed_df(self.spark, self.base_dir, glob)
+            self.invalidate()
+            # cache only what queries read: the note bodies stay out
+            parsed = md.parsed_df(self.spark, self.base_dir, glob, listing).select(
+                "path", "props", "array_keys", "error"
+            )
             parsed.cache()
-            keys, warnings = md.parse_summary(parsed)
+            keys, warnings, file_count = md.parse_summary(parsed)
             # narrow vaults pivot every key once and cache the view;
             # wide vaults (> wide_schema_limit keys) defer to a
             # per-query projection of only the referenced keys
@@ -179,25 +191,12 @@ class FrontmatterEngine:
                 else None
             )
             self._snapshot_key = key
-            self._snapshot = (files_df, parsed, warnings, keys)
-        files_df, parsed, warnings, keys = self._snapshot
-        if files_df is None:
-            use = keys  # SELECT * (or no SQL context): the full width
-            if sql is not None:
-                refs = _referenced_identifiers(sql)
-                if "*" not in refs:
-                    use = sorted(set(keys) & refs)
-            files_df = md.files_dataframe(parsed, use)
-        return files_df, warnings
-
-    def _parsed(self, glob: str) -> DataFrame:
-        self._build_files(glob)
-        assert self._snapshot is not None
-        return self._snapshot[1]
+            self._snapshot = _Snapshot(files_df, parsed, warnings, keys, file_count)
+        return self._snapshot
 
     def invalidate(self) -> None:
         if self._snapshot is not None:
-            self._snapshot[1].unpersist()
+            self._snapshot.parsed.unpersist()
         self._snapshot = None
         self._snapshot_key = None
 
@@ -206,7 +205,12 @@ class FrontmatterEngine:
     # ------------------------------------------------------------------
     def query(self, glob: str, sql: str) -> dict[str, Any]:
         """The main entry point (reference server.py:121-169)."""
-        files_df, warnings = self._build_files(glob, sql)
+        snap = self._build_files(glob)
+        files_df, warnings = snap.files, snap.warnings
+        if files_df is None:
+            refs = _referenced_identifiers(sql)
+            use = snap.keys if "*" in refs else sorted(set(snap.keys) & refs)
+            files_df = md.files_dataframe(snap.parsed, use)
         if (
             self.semantic_enabled
             and self.indexer is not None
@@ -241,17 +245,17 @@ class FrontmatterEngine:
 
     def query_inspect(self, glob: str) -> dict[str, Any]:
         """Schema advertisement (reference server.py:87-118)."""
-        parsed = self._parsed(glob)
-        schema = qs.create_base_schema(parsed)
-        file_count = parsed.filter("error IS NULL").count()
-        warnings = md.parse_warnings(parsed)
+        snap = self._build_files(glob)
+        schema = qs.create_base_schema(snap.parsed, file_count=snap.file_count)
         if (
             self.semantic_enabled
             and self.indexer is not None
             and self.indexer.state == IndexerState.READY
         ):
             schema = qs.add_semantic_schema(schema, self.model.get_dimension())
-        return _build_response({"file_count": file_count, "schema": schema}, warnings)
+        return _build_response(
+            {"file_count": snap.file_count, "schema": schema}, snap.warnings
+        )
 
     # ------------------------------------------------------------------
     # mutation tools (driver-side filesystem ops; warnings contract)
@@ -269,19 +273,18 @@ class FrontmatterEngine:
 
     def _dispatch_mutation(
         self, glob: str, distributed: bool | None
-    ) -> tuple[bool, list[Path] | None]:
+    ) -> tuple[bool, fm.Listing]:
         """Auto-dispatch rule for the batch mutation tools: an explicit
         flag wins; otherwise rewrite executor-parallel once the glob
         matches at least `distributed_mutation_threshold` files (below
         that, Spark job overhead exceeds the driver loop; both paths
         produce byte-identical files and responses — tested). Returns
-        the listing the decision walked (None when the explicit flag
-        skipped it) so the driver-loop path reuses it instead of
-        re-walking the vault."""
-        if distributed is not None:
-            return distributed, None
-        files = fm.collect_files(self.base_dir, glob)
-        return len(files) >= self.distributed_mutation_threshold, files
+        the listing it walked, which either path then rewrites: one walk
+        of the vault per call."""
+        listing = fm.collect_files(self.base_dir, glob)
+        if distributed is None:
+            distributed = len(listing) >= self.distributed_mutation_threshold
+        return distributed, listing
 
     def batch_update(
         self,
@@ -290,11 +293,11 @@ class FrontmatterEngine:
         unset: list[str] | None = None,
         distributed: bool | None = None,
     ) -> dict[str, Any]:
-        use_dist, files = self._dispatch_mutation(glob, distributed)
+        use_dist, listing = self._dispatch_mutation(glob, distributed)
         if use_dist:
-            return self.batch_update_distributed(glob, set, unset)
+            return self.batch_update_distributed(glob, set, unset, listing=listing)
         updated, warnings = [], []
-        for p in files if files is not None else fm.collect_files(self.base_dir, glob):
+        for p in listing:
             rel = p.relative_to(self.base_dir).as_posix()
             try:
                 out = fm.update_file(p, self.base_dir, set, unset)
@@ -313,6 +316,7 @@ class FrontmatterEngine:
         glob: str,
         set: dict[str, Any] | None = None,  # noqa: A002
         unset: list[str] | None = None,
+        listing: fm.Listing | None = None,
     ) -> dict[str, Any]:
         """Scale path for A12: the per-file rewrite runs as a mapInPandas
         stage on executors (same semantics and warnings contract as
@@ -344,7 +348,7 @@ class FrontmatterEngine:
                         warnings.append(f"Failed to update {rel}: {e}")
                 yield pd.DataFrame({"path": paths, "changed": changed, "warning": warnings})
 
-        status = listing_df(self.spark, self.base_dir, glob).mapInPandas(
+        status = listing_df(self.spark, self.base_dir, glob, listing).mapInPandas(
             rewrite, schema="path string, changed boolean, warning string"
         )
         rows = status.collect()
@@ -352,10 +356,10 @@ class FrontmatterEngine:
         return _rewrite_response(rows)
 
     def _batch_array_op(
-        self, glob: str, prop: str, op, files: list[Path] | None = None
+        self, prop: str, op, listing: fm.Listing
     ) -> dict[str, Any]:
         updated, warnings = [], []
-        for p in files if files is not None else fm.collect_files(self.base_dir, glob):
+        for p in listing:
             rel = p.relative_to(self.base_dir).as_posix()
             try:
                 content = p.read_text(encoding="utf-8")
@@ -376,7 +380,9 @@ class FrontmatterEngine:
             {"updated_count": len(updated), "updated_files": updated}, warnings
         )
 
-    def _batch_array_op_distributed(self, glob: str, prop: str, op) -> dict[str, Any]:
+    def _batch_array_op_distributed(
+        self, glob: str, prop: str, op, listing: fm.Listing
+    ) -> dict[str, Any]:
         """Executor-parallel variant of _batch_array_op: the per-file
         parse → mutate → rewrite runs as a mapInPandas stage over the
         listing (same design as batch_update_distributed, engine.py:186).
@@ -415,7 +421,7 @@ class FrontmatterEngine:
                         warns.append(f"Failed to update {rel}: {e}")
                 yield pd.DataFrame({"path": paths, "changed": changed, "warning": warns})
 
-        status = listing_df(self.spark, self.base_dir, glob).mapInPandas(
+        status = listing_df(self.spark, self.base_dir, glob, listing).mapInPandas(
             rewrite, schema="path string, changed boolean, warning string"
         )
         rows = status.collect()
@@ -442,10 +448,10 @@ class FrontmatterEngine:
     def _run_array_op(
         self, glob: str, prop: str, distributed: bool | None, op
     ) -> dict[str, Any]:
-        use_dist, files = self._dispatch_mutation(glob, distributed)
+        use_dist, listing = self._dispatch_mutation(glob, distributed)
         if use_dist:
-            return self._batch_array_op_distributed(glob, prop, op)
-        return self._batch_array_op(glob, prop, op, files=files)
+            return self._batch_array_op_distributed(glob, prop, op, listing)
+        return self._batch_array_op(prop, op, listing)
 
     def batch_array_remove(
         self, glob: str, property: str, value: Any, distributed: bool | None = None  # noqa: A002

@@ -19,7 +19,9 @@ Contracts kept from the reference:
 from __future__ import annotations
 
 import json
+import os
 import re
+import stat
 from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Any
@@ -143,11 +145,31 @@ class FileRecordCache:
         self._store.clear()
 
 
-def collect_files(base_dir: str | Path, glob: str) -> list[Path]:
-    """Expand a glob under base_dir, keeping files only, sorted for
-    determinism (reference server.py:32-36)."""
-    base = Path(base_dir)
-    return sorted(p for p in base.glob(glob) if p.is_file())
+class Listing(list):
+    """What ``collect_files`` returns: the matched paths, sorted, with
+    ``mtimes[i]`` the mtime of ``self[i]`` from the same ``stat``. The
+    engine keys its snapshot on it and hands the same listing to the
+    parse stage, so a cache check and a rebuild walk the vault once."""
+
+    def __init__(self, paths=(), mtimes=()):
+        super().__init__(paths)
+        self.mtimes: list[float] = list(mtimes)
+
+
+def collect_files(base_dir: str | Path, glob: str) -> Listing:
+    """Expand a glob under base_dir, keeping regular files only, sorted
+    for determinism (reference server.py:32-36). Each match is
+    ``stat``-ed once, for its type and its mtime."""
+    entries = []
+    for p in Path(base_dir).glob(glob):
+        try:
+            st = os.stat(p)
+        except OSError:  # dangling symlink, or removed since the walk
+            continue
+        if stat.S_ISREG(st.st_mode):
+            entries.append((p, st.st_mtime))
+    entries.sort(key=lambda e: e[0])
+    return Listing([p for p, _ in entries], [m for _, m in entries])
 
 
 def parse_files(

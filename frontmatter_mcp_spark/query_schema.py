@@ -18,30 +18,32 @@ from typing import Any
 from pyspark.sql import DataFrame, functions as F
 
 
-def create_base_schema(parsed: DataFrame, max_samples: int = 5) -> dict[str, Any]:
-    ok = parsed.filter(F.col("error").isNull()).select("path", "props", "array_keys")
-    file_count = ok.count()
+def create_base_schema(
+    parsed: DataFrame, *, file_count: int, max_samples: int = 5
+) -> dict[str, Any]:
+    """``file_count`` is the number of files that parsed without error
+    (``parse_summary`` counts it with the key union), so the schema
+    itself is one aggregate: one Spark job."""
     if file_count == 0:
         return {"path": {"type": "string", "nullable": False}}
 
-    kv = ok.select(F.explode("props").alias("k", "v"))
+    kv = parsed.filter(F.col("error").isNull()).select(
+        "array_keys", F.explode("props").alias("k", "v")
+    )
     per_key = (
         kv.groupBy("k")
         .agg(
             F.count(F.col("v")).alias("non_null"),
-            F.count("*").alias("present"),
             F.slice(F.array_sort(F.collect_set("v")), 1, max_samples).alias("examples"),
+            F.max(F.expr("array_contains(array_keys, k)")).alias("is_array"),
         )
         .collect()
     )
-    array_keys = {
-        r.k for r in ok.select(F.explode("array_keys").alias("k")).distinct().collect()
-    }
 
     schema: dict[str, Any] = {"path": {"type": "string", "nullable": False}}
     for r in sorted(per_key, key=lambda r: r.k):
         schema[r.k] = {
-            "type": "array" if r.k in array_keys else "string",
+            "type": "array" if r.is_array else "string",
             "nullable": bool(r.non_null < file_count),
             "examples": list(r.examples),
         }

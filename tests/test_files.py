@@ -161,6 +161,19 @@ def test_mtime_cache_hit_and_invalidate(tmp_path):
     assert r2[0].metadata["k"] == "v2"
 
 
+def test_collect_files_keeps_one_mtime_per_path(tmp_path):
+    import os
+
+    write(tmp_path / "b.md", "---\nk: v\n---\n")
+    write(tmp_path / "a" / "x.md", "---\nk: v\n---\n")
+    (tmp_path / "dir.md").mkdir()
+    os.symlink(tmp_path / "gone.md", tmp_path / "dangling.md")
+    os.utime(tmp_path / "b.md", (1.0, 1234.5))
+    listing = fm.collect_files(tmp_path, "**/*.md")
+    assert listing == [tmp_path / "a" / "x.md", tmp_path / "b.md"]
+    assert listing.mtimes == [(tmp_path / "a" / "x.md").stat().st_mtime, 1234.5]
+
+
 def test_update_file_set_unset_precedence(tmp_path):
     write(tmp_path / "a.md", "---\nkeep: kept\ndrop: old\n---\nBody\n")
     out = fm.update_file(
