@@ -58,14 +58,41 @@ def _build_response(base: dict[str, Any], warnings: list[str]) -> dict[str, Any]
     return base
 
 
-def _rewrite_response(rows: list) -> dict[str, Any]:
-    """Response of a distributed rewrite from its (path, changed,
-    warning) rows, which arrive in task order. Files and warnings are put
-    in the driver loop's order (``collect_files`` sorts paths part by
-    part), so both paths return identical lists."""
-    rows = sorted(rows, key=lambda r: Path(r.path))
-    updated = [r.path for r in rows if r.changed]
-    warnings = [r.warning for r in rows if r.warning]
+def _edit_row(abs_path: str | Path, rel: str, edit, list_all: bool) -> tuple:
+    """One file of a batch mutation, on the driver or in an executor:
+    (rel, listed, warning). ``edit(metadata, rel)`` changes the
+    frontmatter in place and returns (write, warning); a file is listed
+    when written, or, with ``list_all``, whenever it was edited without
+    error (batch_update: even a no-op set counts, reference
+    server.py:294-306). Failures become warnings (partial success)."""
+    try:
+        _, write, warning = fm.edit_file(abs_path, lambda meta: edit(meta, rel))
+    except Exception as e:  # noqa: BLE001 — partial success contract
+        return rel, False, f"Failed to update {rel}: {e}"
+    return rel, write or list_all, warning
+
+
+def _array_edit(op, prop: str, **args):
+    """The edit of an array tool: ``op`` is a mutations.py function,
+    called as op(current, path=rel, prop=prop, **args) -> (new, changed,
+    warning); the file is written (and listed) only when it changed."""
+
+    def edit(metadata: dict[str, Any], rel: str) -> tuple[bool, str | None]:
+        new_value, changed, warning = op(metadata.get(prop), path=rel, prop=prop, **args)
+        if changed:
+            metadata[prop] = new_value
+        return changed, warning
+
+    return edit
+
+
+def _batch_response(rows: list) -> dict[str, Any]:
+    """Reply of a batch mutation from its (rel, listed, warning) rows,
+    put in ``collect_files`` order (paths sorted part by part: `bad/x.md`
+    before `bad.md`), whichever order the rows arrived in."""
+    rows = sorted(rows, key=lambda r: Path(r[0]))
+    updated = [rel for rel, listed, _ in rows if listed]
+    warnings = [w for _, _, w in rows if w]
     return _build_response(
         {"updated_count": len(updated), "updated_files": updated}, warnings
     )
@@ -107,7 +134,9 @@ class FrontmatterEngine:
         distributed_mutation_threshold: int = 1000,
     ) -> None:
         self.spark = spark
-        self.base_dir = Path(base_dir)
+        # resolved once: listings, `resolve_path` and the relative paths
+        # of replies all agree also for a relative or symlinked base
+        self.base_dir = Path(base_dir).resolve()
         self.max_rows = max_rows
         self.distributed_mutation_threshold = distributed_mutation_threshold
         self.wide_schema_limit = (
@@ -271,20 +300,44 @@ class FrontmatterEngine:
         self.invalidate()
         return out
 
-    def _dispatch_mutation(
-        self, glob: str, distributed: bool | None
-    ) -> tuple[bool, fm.Listing]:
-        """Auto-dispatch rule for the batch mutation tools: an explicit
-        flag wins; otherwise rewrite executor-parallel once the glob
-        matches at least `distributed_mutation_threshold` files (below
-        that, Spark job overhead exceeds the driver loop; both paths
-        produce byte-identical files and responses — tested). Returns
-        the listing it walked, which either path then rewrites: one walk
-        of the vault per call."""
+    def _batch_edit(
+        self, glob: str, distributed: bool | None, edit, list_all: bool = False
+    ) -> dict[str, Any]:
+        """Run ``edit`` over every file the glob matches (``_edit_row``).
+        An explicit `distributed` wins; otherwise the rewrite runs as a
+        mapInPandas stage on executors once the glob matches at least
+        `distributed_mutation_threshold` files (below that, Spark job
+        overhead exceeds the driver loop). Both paths give the same reply
+        and file bytes; on a cluster the executor path is the one that
+        works when the vault lives on shared storage mounted there."""
         listing = fm.collect_files(self.base_dir, glob)
         if distributed is None:
             distributed = len(listing) >= self.distributed_mutation_threshold
-        return distributed, listing
+        if distributed:
+            # ships edit and _edit_row only: the engine (and its
+            # SparkSession) cannot be pickled
+            def rewrite(batches):
+                import pandas as pd
+
+                for pdf in batches:
+                    rows = [
+                        _edit_row(p, rel, edit, list_all)
+                        for p, rel in zip(pdf["abs_path"], pdf["path"])
+                    ]
+                    yield pd.DataFrame(rows, columns=["path", "listed", "warning"])
+
+            rows = (
+                md.listing_df(self.spark, self.base_dir, glob, listing)
+                .mapInPandas(rewrite, schema="path string, listed boolean, warning string")
+                .collect()
+            )
+        else:
+            rows = [
+                _edit_row(p, p.relative_to(self.base_dir).as_posix(), edit, list_all)
+                for p in listing
+            ]
+        self.invalidate()
+        return _batch_response(rows)
 
     def batch_update(
         self,
@@ -293,140 +346,10 @@ class FrontmatterEngine:
         unset: list[str] | None = None,
         distributed: bool | None = None,
     ) -> dict[str, Any]:
-        use_dist, listing = self._dispatch_mutation(glob, distributed)
-        if use_dist:
-            return self.batch_update_distributed(glob, set, unset, listing=listing)
-        updated, warnings = [], []
-        for p in listing:
-            rel = p.relative_to(self.base_dir).as_posix()
-            try:
-                out = fm.update_file(p, self.base_dir, set, unset)
-                # every successfully processed file counts as updated,
-                # even a no-op set (reference server.py:294-306)
-                updated.append(out["path"])
-            except Exception as e:  # noqa: BLE001 — partial success contract
-                warnings.append(f"Failed to update {rel}: {e}")
-        self.invalidate()
-        return _build_response(
-            {"updated_count": len(updated), "updated_files": updated}, warnings
+        set_unset = fm.set_unset(set, unset)
+        return self._batch_edit(
+            glob, distributed, lambda meta, rel: set_unset(meta), list_all=True
         )
-
-    def batch_update_distributed(
-        self,
-        glob: str,
-        set: dict[str, Any] | None = None,  # noqa: A002
-        unset: list[str] | None = None,
-        listing: fm.Listing | None = None,
-    ) -> dict[str, Any]:
-        """Scale path for A12: the per-file rewrite runs as a mapInPandas
-        stage on executors (same semantics and warnings contract as
-        batch_update). In local mode both paths touch the same
-        filesystem; on a cluster this is the one that works when the
-        vault lives on shared/object storage mounted on executors."""
-        from frontmatter_mcp_spark.sources.markdown import listing_df
-
-        base_dir = self.base_dir
-        set_props, unset_props = set, unset
-
-        def rewrite(batches):
-            import pandas as pd
-
-            from frontmatter_mcp_spark import files as _fm
-
-            for pdf in batches:
-                paths, changed, warnings = [], [], []
-                for abs_path, rel in zip(pdf["abs_path"], pdf["path"]):
-                    try:
-                        _fm.update_file(Path(abs_path), base_dir, set_props, unset_props)
-                        paths.append(rel)
-                        # success == updated (reference server.py:294-306)
-                        changed.append(True)
-                        warnings.append(None)
-                    except Exception as e:  # noqa: BLE001 — partial success
-                        paths.append(rel)
-                        changed.append(False)
-                        warnings.append(f"Failed to update {rel}: {e}")
-                yield pd.DataFrame({"path": paths, "changed": changed, "warning": warnings})
-
-        status = listing_df(self.spark, self.base_dir, glob, listing).mapInPandas(
-            rewrite, schema="path string, changed boolean, warning string"
-        )
-        rows = status.collect()
-        self.invalidate()
-        return _rewrite_response(rows)
-
-    def _batch_array_op(
-        self, prop: str, op, listing: fm.Listing
-    ) -> dict[str, Any]:
-        updated, warnings = [], []
-        for p in listing:
-            rel = p.relative_to(self.base_dir).as_posix()
-            try:
-                content = p.read_text(encoding="utf-8")
-                doc = fm.parse_document(content)
-                metadata, body = dict(doc["metadata"]), doc["body"]
-                current = metadata.get(prop)
-                new_value, changed, warning = op(current, rel)
-                if warning:
-                    warnings.append(warning)
-                if changed:
-                    metadata[prop] = new_value
-                    p.write_text(fm.dump_document(metadata, body), encoding="utf-8")
-                    updated.append(rel)
-            except Exception as e:  # noqa: BLE001
-                warnings.append(f"Failed to update {rel}: {e}")
-        self.invalidate()
-        return _build_response(
-            {"updated_count": len(updated), "updated_files": updated}, warnings
-        )
-
-    def _batch_array_op_distributed(
-        self, glob: str, prop: str, op, listing: fm.Listing
-    ) -> dict[str, Any]:
-        """Executor-parallel variant of _batch_array_op: the per-file
-        parse → mutate → rewrite runs as a mapInPandas stage over the
-        listing (same design as batch_update_distributed, engine.py:186).
-        `op` is a pure (current, rel) -> (new, changed, warning) closure
-        from mutations.py, shipped to executors by cloudpickle. A
-        million-file vault mutates at cluster parallelism instead of
-        single-threaded on the driver; semantics and the warnings /
-        partial-success contract are identical (asserted by
-        tests/test_engine_mutations.py against the driver path)."""
-        from frontmatter_mcp_spark.sources.markdown import listing_df
-
-        def rewrite(batches):
-            import pandas as pd
-
-            from frontmatter_mcp_spark import files as _fm
-
-            for pdf in batches:
-                paths, changed, warns = [], [], []
-                for abs_path, rel in zip(pdf["abs_path"], pdf["path"]):
-                    try:
-                        p = Path(abs_path)
-                        doc = _fm.parse_document(p.read_text(encoding="utf-8"))
-                        metadata, body = dict(doc["metadata"]), doc["body"]
-                        new_value, chg, warning = op(metadata.get(prop), rel)
-                        if chg:
-                            metadata[prop] = new_value
-                            p.write_text(
-                                _fm.dump_document(metadata, body), encoding="utf-8"
-                            )
-                        paths.append(rel)
-                        changed.append(chg)
-                        warns.append(warning)
-                    except Exception as e:  # noqa: BLE001 — partial success
-                        paths.append(rel)
-                        changed.append(False)
-                        warns.append(f"Failed to update {rel}: {e}")
-                yield pd.DataFrame({"path": paths, "changed": changed, "warning": warns})
-
-        status = listing_df(self.spark, self.base_dir, glob, listing).mapInPandas(
-            rewrite, schema="path string, changed boolean, warning string"
-        )
-        rows = status.collect()
-        self.invalidate()
-        return _rewrite_response(rows)
 
     def batch_array_add(
         self,
@@ -436,32 +359,14 @@ class FrontmatterEngine:
         allow_duplicates: bool = False,
         distributed: bool | None = None,
     ) -> dict[str, Any]:
-        return self._run_array_op(
-            glob,
-            property,
-            distributed,
-            lambda cur, rel: mut.add_value(
-                cur, value, path=rel, prop=property, allow_duplicates=allow_duplicates
-            ),
-        )
-
-    def _run_array_op(
-        self, glob: str, prop: str, distributed: bool | None, op
-    ) -> dict[str, Any]:
-        use_dist, listing = self._dispatch_mutation(glob, distributed)
-        if use_dist:
-            return self._batch_array_op_distributed(glob, prop, op, listing)
-        return self._batch_array_op(prop, op, listing)
+        edit = _array_edit(mut.add_value, property, value=value, allow_duplicates=allow_duplicates)
+        return self._batch_edit(glob, distributed, edit)
 
     def batch_array_remove(
         self, glob: str, property: str, value: Any, distributed: bool | None = None  # noqa: A002
     ) -> dict[str, Any]:
-        return self._run_array_op(
-            glob,
-            property,
-            distributed,
-            lambda cur, rel: mut.remove_value(cur, value, path=rel, prop=property),
-        )
+        edit = _array_edit(mut.remove_value, property, value=value)
+        return self._batch_edit(glob, distributed, edit)
 
     def batch_array_replace(
         self,
@@ -471,34 +376,19 @@ class FrontmatterEngine:
         new_value: Any,
         distributed: bool | None = None,
     ) -> dict[str, Any]:
-        return self._run_array_op(
-            glob,
-            property,
-            distributed,
-            lambda cur, rel: mut.replace_value(
-                cur, old_value, new_value, path=rel, prop=property
-            ),
-        )
+        edit = _array_edit(mut.replace_value, property, old=old_value, new=new_value)
+        return self._batch_edit(glob, distributed, edit)
 
     def batch_array_sort(
         self, glob: str, property: str, reverse: bool = False, distributed: bool | None = None  # noqa: A002
     ) -> dict[str, Any]:
-        return self._run_array_op(
-            glob,
-            property,
-            distributed,
-            lambda cur, rel: mut.sort_values(cur, path=rel, prop=property, reverse=reverse),
-        )
+        edit = _array_edit(mut.sort_values, property, reverse=reverse)
+        return self._batch_edit(glob, distributed, edit)
 
     def batch_array_unique(
         self, glob: str, property: str, distributed: bool | None = None  # noqa: A002
     ) -> dict[str, Any]:
-        return self._run_array_op(
-            glob,
-            property,
-            distributed,
-            lambda cur, rel: mut.unique_values(cur, path=rel, prop=property),
-        )
+        return self._batch_edit(glob, distributed, _array_edit(mut.unique_values, property))
 
     # ------------------------------------------------------------------
     # index tools (reference server.py:172-234)

@@ -3,17 +3,19 @@
 Spark-first re-expression of the reference's file layer
 (src/frontmatter_mcp/files.py): the parse itself is plain Python over
 PyYAML (libyaml-backed when installed; used inside a mapInPandas stage
-by sources.markdown), mutation rewrites are
-driver/executor-side filesystem ops, and the mtime cache becomes both an
-in-memory dict (small vaults) and the basis of incremental snapshots.
+by sources.markdown), and each mutation tool edits a file through one
+``edit_file`` call, run by the driver loop or inside executors.
+``FileRecordCache`` / ``parse_files`` are the driver-side reference
+parse that tests/test_files_oracle.py builds its DuckDB table from; the
+engine's own cache is its Spark snapshot.
 
 Contracts kept from the reference:
 - values normalize to strings: None stays NULL, YAML lists JSON-encode,
   everything else is str() (files.py:52-67 + query.py:10-20, ADR-0005/6);
 - paths are relative to the base dir (ADR-0007);
 - per-file parse errors become warnings, never aborts (files.py:70-107);
-- update() merges `set` minus `unset`, pops `unset`, writes only on
-  change, creates frontmatter when absent (files.py:110-150).
+- update() merges `set` minus `unset`, pops `unset`, writes whenever
+  set/unset is given, creates frontmatter when absent (files.py:110-150).
 """
 
 from __future__ import annotations
@@ -22,6 +24,7 @@ import json
 import os
 import re
 import stat
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Any
@@ -221,28 +224,52 @@ def resolve_write_path(base_dir: str | Path, rel_path: str) -> Path:
     return target
 
 
+def set_unset(
+    set_props: dict[str, Any] | None, unset_props: list[str] | None
+) -> Callable[[dict[str, Any]], tuple[bool, None]]:
+    """The edit of ``update`` (reference files.py:110-150): `unset` wins
+    over `set` for the same key. It writes whenever set/unset is given —
+    even a no-op set renormalizes the YAML and bumps mtime, matching the
+    reference's frontmatter.dump behavior."""
+    set_props = set_props or {}
+    unset_props = unset_props or []
+
+    def edit(metadata: dict[str, Any]) -> tuple[bool, None]:
+        for k, v in set_props.items():
+            if k not in unset_props:
+                metadata[k] = v
+        for k in unset_props:
+            metadata.pop(k, None)
+        return bool(set_props or unset_props), None
+
+    return edit
+
+
+def edit_file(
+    abs_path: str | Path, edit: Callable[[dict[str, Any]], tuple[bool, str | None]]
+) -> tuple[dict[str, Any], bool, str | None]:
+    """The one per-file mutation: read, parse, let ``edit`` change a copy
+    of the frontmatter in place and return (write, warning), then dump
+    and write back when ``write``. A file without frontmatter gains a
+    block. Returns (metadata, write, warning); read and YAML errors
+    raise."""
+    p = Path(abs_path)
+    doc = parse_document(p.read_text(encoding="utf-8"))
+    metadata = dict(doc["metadata"])
+    write, warning = edit(metadata)
+    if write:
+        p.write_text(dump_document(metadata, doc["body"]), encoding="utf-8")
+    return metadata, write, warning
+
+
 def update_file(
     abs_path: Path,
     base_dir: str | Path,
     set_props: dict[str, Any] | None = None,
     unset_props: list[str] | None = None,
 ) -> dict[str, Any]:
-    """Set/unset frontmatter properties (reference files.py:110-150).
-    `unset` wins over `set` for the same key; rewrites the file whenever
-    set/unset is provided — even a no-op set renormalizes the YAML and
-    bumps mtime, matching the reference's frontmatter.dump behavior;
+    """Set/unset frontmatter properties of one file (``set_unset``);
     creates a frontmatter block if the file has none."""
-    set_props = set_props or {}
-    unset_props = unset_props or []
-    content = abs_path.read_text(encoding="utf-8")
-    doc = parse_document(content)
-    metadata, body = dict(doc["metadata"]), doc["body"]
-    for k, v in set_props.items():
-        if k not in unset_props:
-            metadata[k] = v
-    for k in unset_props:
-        metadata.pop(k, None)
-    if set_props or unset_props:
-        abs_path.write_text(dump_document(metadata, body), encoding="utf-8")
     rel = Path(abs_path).relative_to(base_dir).as_posix()
+    metadata, _, _ = edit_file(abs_path, set_unset(set_props, unset_props))
     return {"path": rel, "frontmatter": metadata}

@@ -3,8 +3,11 @@ fixture edge cases FIXTURES.md F6)."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
+from frontmatter_mcp_spark import engine as engine_mod
 from frontmatter_mcp_spark.engine import FrontmatterEngine
 from frontmatter_mcp_spark.files import parse_file
 
@@ -130,6 +133,7 @@ def _mutation_vault(root):
     (root / "b.md").write_text("---\ndate: 2025-11-26\ntags:\n  - duckdb\n---\nBody B\n")
     (root / "c.md").write_text("---\ntags: scalar-not-array\n---\nBody C\n")
     (root / "bad.md").write_text("---\nbroken: [oops\n---\n")
+    (root / "plain.md").write_text("A body and no frontmatter\n")
     return root
 
 
@@ -151,10 +155,12 @@ def test_batch_array_distributed_matches_driver_path(spark, tmp_path):
         out_d = getattr(eng_d, method)("*.md", "tags", **kwargs)
         out_x = getattr(eng_x, method)("*.md", "tags", **kwargs, distributed=True)
         assert out_x == out_d, f"{method}({kwargs}) diverged"
-        for name in ("a.md", "b.md", "c.md"):
+        for name in ("a.md", "b.md", "c.md", "plain.md"):
             assert (tmp_path / "dist" / name).read_text() == (
                 tmp_path / "driver" / name
             ).read_text(), f"{method} left different bytes in {name}"
+    # the first add gave the body-only file a frontmatter block on both paths
+    assert tags(tmp_path / "dist", "plain.md") == ["spark"]
 
 
 def test_batch_update_distributed_matches_driver_path(spark, tmp_path):
@@ -182,7 +188,8 @@ def test_batch_update_distributed_matches_driver_path(spark, tmp_path):
     out_d = eng_d.batch_array_add("**/*.md", "tags", "spark")
     out_x = eng_x.batch_array_add("**/*.md", "tags", "spark", distributed=True)
     assert len(out_d["warnings"]) == 3 and out_x == out_d
-    for name in ("a.md", "b.md", "c.md", "bad.md", "bad/x.md"):
+    assert (tmp_path / "dist" / "plain.md").read_text().startswith("---\nk: v\ntags:")
+    for name in ("a.md", "b.md", "c.md", "bad.md", "bad/x.md", "plain.md"):
         assert (tmp_path / "dist" / name).read_bytes() == (
             tmp_path / "driver" / name
         ).read_bytes(), f"different bytes in {name}"
@@ -196,7 +203,7 @@ def test_mutation_invalidates_query_snapshot(engine, vault):
     assert out1["results"][0]["n"] == 2  # snapshot invalidated + new column
 
 
-def test_batch_mutations_auto_dispatch_by_file_count(spark, tmp_path):
+def test_batch_mutations_auto_dispatch_by_file_count(spark, tmp_path, monkeypatch):
     """With no explicit flag, batch mutations pick the executor-parallel
     path once the glob matches distributed_mutation_threshold files, and
     the driver loop below it — same results either way."""
@@ -207,17 +214,23 @@ def test_batch_mutations_auto_dispatch_by_file_count(spark, tmp_path):
     eng = FrontmatterEngine(spark, vault, distributed_mutation_threshold=3)
 
     calls = {"dist": 0, "driver": 0}
-    orig_dist, orig_drv = eng._batch_array_op_distributed, eng._batch_array_op
+    orig, orig_listing_df = eng._batch_edit, engine_mod.md.listing_df
+    stages = []
 
-    def spy_dist(*a, **k):
-        calls["dist"] += 1
-        return orig_dist(*a, **k)
+    def spy_listing_df(*a, **k):
+        stages.append(1)
+        return orig_listing_df(*a, **k)
 
-    def spy_drv(*a, **k):
-        calls["driver"] += 1
-        return orig_drv(*a, **k)
+    def spy(*a, **k):
+        # a call took the executor path iff it built the listing DataFrame
+        # the mapInPandas rewrite runs over; the driver loop builds none
+        stages.clear()
+        out = orig(*a, **k)
+        calls["dist" if stages else "driver"] += 1
+        return out
 
-    eng._batch_array_op_distributed, eng._batch_array_op = spy_dist, spy_drv
+    monkeypatch.setattr(engine_mod.md, "listing_df", spy_listing_df)
+    eng._batch_edit = spy
 
     out = eng.batch_array_add("*.md", "tags", "x")  # 4 files >= 3 -> distributed
     assert out["updated_count"] == 4 and calls == {"dist": 1, "driver": 0}
@@ -230,3 +243,55 @@ def test_batch_mutations_auto_dispatch_by_file_count(spark, tmp_path):
     # batch_update auto-dispatches through the same rule
     out = eng.batch_update("*.md", set={"seen": True})
     assert out["updated_count"] == 4
+
+
+def _age(paths):
+    """Push each file's mtime 10 s back, so a rewrite shows in its mtime;
+    returns {path: (bytes, mtime)}."""
+    for p in paths:
+        st = p.stat()
+        os.utime(p, (st.st_atime, st.st_mtime - 10))
+    return {p: (p.read_bytes(), p.stat().st_mtime) for p in paths}
+
+
+@pytest.mark.parametrize("distributed", [False, True])
+def test_batch_update_without_set_or_unset_writes_nothing(spark, tmp_path, distributed):
+    """The server's schema requires only `glob`: with neither set nor
+    unset, every parsed file is listed and none is written."""
+    vault = _mutation_vault(tmp_path / "v")
+    before = _age(sorted(vault.glob("*.md")))
+    out = FrontmatterEngine(spark, vault).batch_update("*.md", distributed=distributed)
+    assert out["updated_files"] == ["a.md", "b.md", "c.md", "plain.md"]
+    assert len(out["warnings"]) == 1 and "bad.md" in out["warnings"][0]
+    assert {p: (p.read_bytes(), p.stat().st_mtime) for p in before} == before
+
+
+@pytest.mark.parametrize("distributed", [False, True])
+def test_array_op_that_changes_nothing_writes_nothing(spark, tmp_path, distributed):
+    vault = _mutation_vault(tmp_path / "v")
+    (vault / "s.md").write_text("---\ntags:\n- a\n- b\n---\nBody S\n")
+    before = _age(sorted(vault.glob("*.md")))
+    eng = FrontmatterEngine(spark, vault)
+    out = eng.batch_array_remove("*.md", "tags", "absent", distributed=distributed)
+    assert out["updated_count"] == 0
+    out = eng.batch_array_sort("s.md", "tags", distributed=distributed)
+    assert out == {"updated_count": 0, "updated_files": []}
+    assert {p: (p.read_bytes(), p.stat().st_mtime) for p in before} == before
+
+
+def test_update_through_relative_base_dir(spark, tmp_path, monkeypatch):
+    (tmp_path / "bd").mkdir()
+    (tmp_path / "bd" / "a.md").write_text("---\nk: old\n---\nBody\n")
+    monkeypatch.chdir(tmp_path)
+    out = FrontmatterEngine(spark, "bd").update("a.md", set={"k": "new"})
+    assert out["path"] == "a.md"
+    assert parse_file(tmp_path / "bd" / "a.md", tmp_path / "bd").metadata == {"k": "new"}
+
+
+def test_update_through_symlinked_base_dir(spark, tmp_path):
+    (tmp_path / "real").mkdir()
+    (tmp_path / "real" / "a.md").write_text("---\nk: old\n---\nBody\n")
+    os.symlink(tmp_path / "real", tmp_path / "link")
+    out = FrontmatterEngine(spark, tmp_path / "link").update("a.md", set={"k": "new"})
+    assert out["path"] == "a.md"
+    assert parse_file(tmp_path / "real" / "a.md", tmp_path / "real").metadata == {"k": "new"}

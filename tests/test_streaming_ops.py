@@ -98,14 +98,14 @@ def test_batch_update_distributed_matches_driver_path(spark, tmp_path):
         (tmp_path / f"f{i:02d}.md").write_text(f"---\nn: {i}\n---\nbody {i}\n")
     (tmp_path / "bad.md").write_text("---\nbroken: [oops\n---\n")
     eng = FrontmatterEngine(spark, tmp_path)
-    out = eng.batch_update_distributed("*.md", set={"stage": "done"})
+    out = eng.batch_update("*.md", set={"stage": "done"}, distributed=True)
     assert out["updated_count"] == 20
     assert len(out["warnings"]) == 1 and "bad.md" in out["warnings"][0]
     meta = parse_file(tmp_path / "f07.md", tmp_path).metadata
     assert meta == {"n": 7, "stage": "done"}
     # reference semantics: every successfully processed file counts as
     # updated even when values are unchanged (reference server.py:294-306)
-    out2 = eng.batch_update_distributed("*.md", set={"stage": "done"})
+    out2 = eng.batch_update("*.md", set={"stage": "done"}, distributed=True)
     assert out2["updated_count"] == 20
 
 
